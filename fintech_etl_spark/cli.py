@@ -29,7 +29,7 @@ import json
 import os
 import time
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 from fintech_etl_spark.operators.receipts import build_receipts, to_webhook_payloads
 from fintech_etl_spark.session import build_session
@@ -55,7 +55,24 @@ def _process(
         per_file=True,
     )
     receipts.persist()
-    n = receipts.count()
+    try:
+        n = receipts.count()
+        _deliver(spark, receipts, lake, webhook, transactional_lake)
+    finally:
+        # a refused write (SchemaEvolutionError, the plain->transactional
+        # ValueError) must not leave the frame cached for good
+        receipts.unpersist()
+    return n
+
+
+def _deliver(
+    spark: SparkSession,
+    receipts: DataFrame,
+    lake: str | None,
+    webhook: str | None,
+    transactional_lake: bool,
+) -> None:
+    """Write ``receipts`` to the lake and/or the webhook."""
     if lake:
         if transactional_lake:
             # first write creates the manifest log; every later write
@@ -101,8 +118,6 @@ def _process(
     elif webhook:
         # no lake: nothing to anchor an outbox to — direct send
         WebhookSink(url=webhook).send_batch(to_webhook_payloads(receipts))
-    receipts.unpersist()
-    return n
 
 
 def _pq_cand_value(s: str):

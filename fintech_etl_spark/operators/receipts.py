@@ -27,17 +27,50 @@ Fidelity notes (SURVEY §2.2, §2.4):
 from __future__ import annotations
 
 import datetime as _dt
+import functools
 
-from pyspark.sql import DataFrame
+from pyspark import SparkContext
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from fintech_etl_spark.functions import rules as R
 from fintech_etl_spark.sources.invoice_csv import ROW_IDX, SOURCE_PATH
 
 INVOICE_KEY = "Invoice Number"
 
+#: JVM gateway -> {factory name: its Column(s)}; holds one gateway at most
+_GATEWAY_EXPRS: dict[object, dict[str, object]] = {}
 
-def line_item_struct() -> F.Column:
+
+def _per_gateway(build):
+    """Memoize a zero-argument Column factory per JVM gateway.
+
+    In classic PySpark every ``F.*`` call is one py4j round trip, and the
+    rule expressions below take thousands of them — rebuilt on every
+    call they were most of ``build_receipts``' own time. An unresolved
+    Column holds no session state, so one built on a gateway serves every
+    session on it. The key is the live ``SparkContext._gateway`` object,
+    never its ``id()``: a Column built by a gateway that has since been
+    replaced is never handed out, and the memo is emptied when the
+    gateway changes, so it never keeps a dead one alive."""
+
+    @functools.wraps(build)
+    def memo():
+        gateway = SparkContext._gateway
+        exprs = _GATEWAY_EXPRS.get(gateway)
+        if exprs is None:
+            _GATEWAY_EXPRS.clear()
+            exprs = _GATEWAY_EXPRS[gateway] = {}
+        if build.__name__ not in exprs:
+            exprs[build.__name__] = build()
+        return exprs[build.__name__]
+
+    return memo
+
+
+@_per_gateway
+def line_item_struct() -> Column:
     """The 13-field LineItem struct (/root/reference/stream/schema.py:6-19)
     computed entirely from column expressions."""
     name = R.trimmed("Product Description")
@@ -95,12 +128,35 @@ def build_receipts(
     number appearing in two files must yield two receipts, not one
     merged across files.
     """
-    first = lambda c: F.min_by(c, F.col(ROW_IDX))  # first row in file order
-
+    src = [F.col(SOURCE_PATH)] if per_file else []
     rows = invoice_df.filter(F.col(INVOICE_KEY).isNotNull()).select(
-        F.col(INVOICE_KEY),
-        F.col(ROW_IDX),
-        *([F.col(SOURCE_PATH)] if per_file else []),
+        F.col(INVOICE_KEY), F.col(ROW_IDX), *src, *_line_columns()
+    )
+    grouped = rows.groupBy(F.col(INVOICE_KEY), *src).agg(*_invoice_aggs())
+
+    receipt_no, vendor, invoice_date, amounts = _receipt_columns()
+    path_col = src[0] if per_file else F.lit(gcs_path)
+    return grouped.select(
+        receipt_no.alias("receipt_id"),
+        vendor,
+        R.parse_invoice_date(invoice_date, run_date).alias("transaction_date"),
+        *amounts,
+        R.source_file(gcs_bucket, path_col, google_drive_url).alias(
+            "source_file"
+        ),
+        F.lit(processed_at).alias("processed_at"),
+        F.lit(gcs_bucket).alias("gcs_bucket"),
+        path_col.alias("gcs_path"),
+        R.document_id(
+            F.lit(gmail_id) if gmail_id is not None else None, receipt_no, run_ts
+        ).alias("document_id"),
+    ).orderBy("receipt_id")
+
+
+@_per_gateway
+def _line_columns() -> tuple[Column, ...]:
+    """Per-line projection after the group-key columns."""
+    return (
         line_item_struct().alias("_item"),
         F.col("Invoice Date").alias("_invoice_date"),
         F.col("Vendor Name").alias("_vendor"),
@@ -109,8 +165,11 @@ def build_receipts(
         R.safe_num("Extended Price").alias("_ext_price"),
     )
 
-    group_cols = [INVOICE_KEY] + ([SOURCE_PATH] if per_file else [])
-    grouped = rows.groupBy(*group_cols).agg(
+
+@_per_gateway
+def _invoice_aggs() -> tuple[Column, ...]:
+    first = lambda c: F.min_by(c, F.col(ROW_IDX))  # first row in file order
+    return (
         first("_vendor").alias("_vendor"),
         first("_invoice_date").alias("_invoice_date"),
         first("_invoice_amount").alias("_invoice_amount"),
@@ -124,31 +183,24 @@ def build_receipts(
         ).alias("line_items"),
     )
 
-    receipt_no = R.trimmed(F.col(INVOICE_KEY))
-    path_col = (
-        F.col(SOURCE_PATH) if per_file else F.lit(gcs_path)
-    )
-    return grouped.select(
-        receipt_no.alias("receipt_id"),
+
+@_per_gateway
+def _receipt_columns() -> tuple[Column, Column, Column, tuple[Column, ...]]:
+    """The receipt number, vendor, trimmed raw invoice date and the
+    amount/item fields that follow ``transaction_date`` — every receipt
+    field that does not depend on a ``build_receipts`` argument."""
+    return (
+        R.trimmed(F.col(INVOICE_KEY)),
         R.vendor_name("_vendor").alias("vendor"),
-        R.parse_invoice_date(R.trimmed("_invoice_date"), run_date).alias(
-            "transaction_date"
+        R.trimmed("_invoice_date"),
+        (
+            R.invoice_amount("_invoice_amount").alias("total_amount"),
+            R.safe_num("_tax_adj").alias("sales_tax"),
+            F.col("_subtotal").alias("subtotal"),
+            F.col("item_count"),
+            F.col("line_items"),
         ),
-        R.invoice_amount("_invoice_amount").alias("total_amount"),
-        R.safe_num("_tax_adj").alias("sales_tax"),
-        F.col("_subtotal").alias("subtotal"),
-        F.col("item_count"),
-        F.col("line_items"),
-        R.source_file(gcs_bucket, path_col, google_drive_url).alias(
-            "source_file"
-        ),
-        F.lit(processed_at).alias("processed_at"),
-        F.lit(gcs_bucket).alias("gcs_bucket"),
-        path_col.alias("gcs_path"),
-        R.document_id(
-            F.lit(gmail_id) if gmail_id is not None else None, receipt_no, run_ts
-        ).alias("document_id"),
-    ).orderBy("receipt_id")
+    )
 
 
 def _wire_document() -> F.Column:
@@ -167,6 +219,16 @@ def _wire_document() -> F.Column:
         F.col("line_items").alias("lineItems"),
         F.col("source_file"),
     )
+
+
+#: what :func:`to_webhook_payloads` emits — the schema of every webhook
+#: outbox segment, which the outbox drain reads without inferring it
+OUTBOX_SCHEMA = T.StructType(
+    [
+        T.StructField("document_id", T.StringType()),
+        T.StructField("payload", T.StringType()),
+    ]
+)
 
 
 def to_webhook_payloads(receipts: DataFrame) -> DataFrame:

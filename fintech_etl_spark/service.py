@@ -95,14 +95,18 @@ class EtlHttpService:
             per_file=True,
         )
         receipts.persist()
-        n = receipts.count()
-        if self.lake_dir:
-            write_receipts_parquet(receipts, self.lake_dir)
-        if self.webhook_url:
-            WebhookSink(url=self.webhook_url, poster=self.webhook_poster).send_batch(
-                to_webhook_payloads(receipts)
-            )
-        receipts.unpersist()
+        try:
+            n = receipts.count()
+            if self.lake_dir:
+                write_receipts_parquet(receipts, self.lake_dir)
+            if self.webhook_url:
+                WebhookSink(
+                    url=self.webhook_url, poster=self.webhook_poster
+                ).send_batch(to_webhook_payloads(receipts))
+        finally:
+            # a refused write must not leave one cached frame per bad
+            # upload in this long-lived process
+            receipts.unpersist()
         return n
 
     def _test_webhook(self, url: str | None) -> dict:

@@ -12,10 +12,21 @@ tests and ``gs://``/``s3a://`` through the Hadoop connectors.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from fintech_etl_spark.functions.rules import landing_object_name
+
+#: one ``files`` tuple as an Arrow row
+_INTAKE_SCHEMA = pa.schema(
+    [
+        ("payload", pa.binary()),
+        ("received_date", pa.string()),
+        ("gmail_id", pa.string()),
+        ("original_name", pa.string()),
+    ]
+)
 
 
 def land_raw_files(
@@ -30,10 +41,15 @@ def land_raw_files(
     One parquet row per file keeps tiny push payloads from becoming a
     small-files problem on the object store: the landing zone compacts
     naturally per micro-batch, and the manifest is queryable.
+
+    The rows go in as an Arrow table, which plans as an in-memory local
+    relation: a Python list would plan as an RDD scan whose tasks cost
+    150-220 ms each even when empty, on every landing.
     """
-    df = spark.createDataFrame(
-        files, "payload binary, received_date string, gmail_id string, original_name string"
-    ).select(
+    table = pa.Table.from_pylist(
+        [dict(zip(_INTAKE_SCHEMA.names, f)) for f in files], schema=_INTAKE_SCHEMA
+    )
+    df = spark.createDataFrame(table).select(
         landing_object_name("received_date", "gmail_id", "original_name").alias(
             "object_name"
         ),

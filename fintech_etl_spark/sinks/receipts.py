@@ -727,7 +727,7 @@ def drain_webhook_outbox(spark: SparkSession, path: str, sink, *, lock=None) -> 
     lake's drains must mutually exclude through the same store as its
     writers). Returns ``{"batches": n, "sent": s, "failed": f,
     "skipped": k, "drained": [...]}``."""
-    from pyspark.sql import functions as F
+    from fintech_etl_spark.operators.receipts import OUTBOX_SCHEMA
 
     if getattr(sink, "ledger_path", None) is None:
         raise ValueError(
@@ -747,12 +747,12 @@ def drain_webhook_outbox(spark: SparkSession, path: str, sink, *, lock=None) -> 
         totals["drained"] = []
         return totals
     ids = [outbox_batch_id(os.path.relpath(s, path)) for s in segs]
-    # ONE multi-path scan over every pending segment (outbox segments
-    # share one fixed schema, so the flat read is safe); the batch id
+    # ONE multi-path scan over every pending segment, read with the
+    # schema to_webhook_payloads wrote (no inference job); the batch id
     # is derived per-row from the file path via a literal
     # segment-dir → id map — a per-segment spark.read would cost one
-    # schema-inference job EACH, putting the drain right back at
-    # O(pending segments) driver-side jobs
+    # job EACH, putting the drain right back at O(pending segments)
+    # sequential jobs
     id_map = F.create_map(
         *[
             x
@@ -766,7 +766,7 @@ def drain_webhook_outbox(spark: SparkSession, path: str, sink, *, lock=None) -> 
     # and mis-key every row of a lake whose own root path contains a
     # 'segments' component (the r15 self-review catch)
     seg_dir = F.element_at(F.split(F.input_file_name(), "/"), -2)
-    payloads = spark.read.parquet(*segs).select(
+    payloads = spark.read.schema(OUTBOX_SCHEMA).parquet(*segs).select(
         "document_id",
         "payload",
         F.element_at(id_map, seg_dir).cast("long").alias("batch_id"),

@@ -19,7 +19,9 @@ import json
 from collections.abc import Callable, Iterator
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Row
+from pyspark.sql import Column, DataFrame, Row
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 Poster = Callable[[str, bytes, dict[str, str]], int]  # (url, body, headers) -> status
 
@@ -30,6 +32,41 @@ def _default_poster(url: str, body: bytes, headers: dict[str, str]) -> int:
     req = urllib.request.Request(url, data=body, headers=headers, method="POST")
     with urllib.request.urlopen(req, timeout=30) as resp:  # noqa: S310
         return resp.status
+
+
+#: the delivery ledger as read back: one row per delivered document,
+#: hive-partitioned on ``batch_id`` (so the partition column comes last)
+LEDGER_SCHEMA = T.StructType(
+    [
+        T.StructField("document_id", T.StringType()),
+        T.StructField("delivered_at", T.TimestampType()),
+        T.StructField("batch_id", T.LongType()),
+    ]
+)
+
+
+def _append_ledger(attempted: DataFrame, batch_id: Column, ledger_path: str) -> None:
+    """Append the successful rows of ``attempted`` (``document_id``,
+    ``ok``) to the ledger, partitioned by ``batch_id``.
+
+    Appending IS the action that drives delivery: only successes are
+    recorded, so a crash between post and append degrades to
+    at-least-once (receivers still dedupe on document_id), never to a
+    lost skip. The ``batch_id=`` partitions let a skip read prune to
+    the batches it names instead of scanning the whole ledger;
+    retention of delivered batches is
+    ``sinks.maintenance.expire_ledger_batches``."""
+    (
+        attempted.filter(F.col("ok"))
+        .select(
+            "document_id",
+            F.current_timestamp().alias("delivered_at"),
+            batch_id.cast("long").alias("batch_id"),
+        )
+        .write.mode("append")
+        .partitionBy("batch_id")
+        .parquet(ledger_path)
+    )
 
 
 @dataclass
@@ -121,7 +158,6 @@ class WebhookSink:
         action does the posting (``mapInPandas`` → parquet append of
         the successes); counts come from cheap metadata reads after."""
         import pandas as pd
-        from pyspark.sql import functions as F
 
         spark = payloads.sparkSession
         url = self.url
@@ -156,26 +192,7 @@ class WebhookSink:
         n_skipped = n_total - n_to_send
 
         attempted = to_send.mapInPandas(deliver, "document_id string, ok boolean")
-        # the parquet append IS the action that drives delivery: only
-        # successes are recorded, so a crash between post and append
-        # degrades to at-least-once (receiver still dedupes on
-        # document_id), never to a lost skip
-        (
-            attempted.filter(F.col("ok"))
-            .select(
-                "document_id",
-                F.lit(batch_id).cast("long").alias("batch_id"),
-                F.current_timestamp().alias("delivered_at"),
-            )
-            # partition by batch_id: the per-batch skip read prunes to
-            # ONE directory instead of scanning the whole ledger — an
-            # append-only ledger on a long-lived stream is otherwise an
-            # unbounded per-batch scan. Retention of delivered batches
-            # is sinks.maintenance.expire_ledger_batches.
-            .write.mode("append")
-            .partitionBy("batch_id")
-            .parquet(self.ledger_path)
-        )
+        _append_ledger(attempted, F.lit(batch_id), self.ledger_path)
         done = self._read_ledger(spark, batch_id)
         n_done = done.count() if done is not None else 0
         sent = n_done - n_skipped
@@ -214,7 +231,6 @@ class WebhookSink:
         ``{batch_id: {"sent", "failed", "skipped"}}`` (every id in
         ``batch_ids`` present, zeros for ids with no payload rows)."""
         import pandas as pd
-        from pyspark.sql import functions as F
 
         if self.ledger_path is None:
             raise ValueError(
@@ -270,21 +286,7 @@ class WebhookSink:
         attempted = to_send.mapInPandas(
             deliver, "document_id string, batch_id long, ok boolean"
         )
-        # the partitioned append IS the delivery action (successes
-        # only): a crash between post and append degrades to
-        # at-least-once, never to a lost skip — same contract as
-        # _send_with_ledger, same per-batch partition pruning
-        (
-            attempted.filter(F.col("ok"))
-            .select(
-                "document_id",
-                F.col("batch_id").cast("long").alias("batch_id"),
-                F.current_timestamp().alias("delivered_at"),
-            )
-            .write.mode("append")
-            .partitionBy("batch_id")
-            .parquet(self.ledger_path)
-        )
+        _append_ledger(attempted, F.col("batch_id"), self.ledger_path)
         done = self._read_ledger_multi(spark, batch_ids)
         n_done = {} if done is None else _per_batch(done)
         out: dict[int, dict[str, int]] = {}
@@ -312,10 +314,9 @@ class WebhookSink:
         isin filter on the partition column prunes the listing to the
         named ``batch_id=`` directories only."""
         from pyspark.errors import AnalysisException
-        from pyspark.sql import functions as F
 
         try:
-            ledger = spark.read.parquet(self.ledger_path)
+            ledger = spark.read.schema(LEDGER_SCHEMA).parquet(self.ledger_path)
         except AnalysisException as exc:
             # same contract as the Pub/Sub ledger (r8 advice fix there):
             # only path-not-found means "fresh ledger"; a transient FS

@@ -178,20 +178,61 @@ def test_webhook_sink_accounting(spark, tmp_path):
 
 
 def test_landing_sink_object_names(spark, tmp_path):
+    """Two files in one call (a non-UTF-8 payload and an empty one) and
+    an empty call: bytes, object names, sizes and the parquet schema
+    Spark records in each footer all read back exactly."""
+    import pyarrow.parquet as pq
+    from pyspark.sql import types as T
+
     from fintech_etl_spark.sinks.landing import land_raw_files
 
-    body = (HEADER + "\n" + ROWS[0]).encode()
+    landed_schema = T.StructType(
+        [
+            T.StructField("object_name", T.StringType()),
+            T.StructField("payload", T.BinaryType()),
+            T.StructField("n_bytes", T.IntegerType()),
+            T.StructField("received_date", T.StringType()),
+            T.StructField("gmail_id", T.StringType()),
+            T.StructField("original_name", T.StringType()),
+        ]
+    )
+
+    def footer_schemas(path):
+        return [
+            T.StructType.fromJson(
+                json.loads(
+                    pq.read_schema(f).metadata[
+                        b"org.apache.spark.sql.parquet.row.metadata"
+                    ]
+                )
+            )
+            for f in glob.glob(os.path.join(path, "*.parquet"))
+        ]
+
+    body = (HEADER + "\n" + ROWS[0].replace("Acme", "Ácme")).encode("latin-1")
+    out = str(tmp_path / "landing")
     land_raw_files(
         spark,
-        [(body, "2024-06-01", "g42", "my invoice file.csv")],
-        str(tmp_path / "landing"),
+        [
+            (body, "2024-06-01", "g42", "my invoice file.csv"),
+            (b"", "2024-06-02", "g43", "empty.csv"),
+        ],
+        out,
     )
-    landed = spark.read.parquet(str(tmp_path / "landing")).collect()
-    assert len(landed) == 1
+    landed = sorted(spark.read.parquet(out).collect(), key=lambda r: r.gmail_id)
     # F25: spaces → underscores, intake/ prefix
-    assert landed[0].object_name == "intake/2024-06-01_g42_my_invoice_file.csv"
-    assert bytes(landed[0].payload) == body
-    assert landed[0].n_bytes == len(body)
+    assert [(r.object_name, bytes(r.payload), r.n_bytes) for r in landed] == [
+        ("intake/2024-06-01_g42_my_invoice_file.csv", body, len(body)),
+        ("intake/2024-06-02_g43_empty.csv", b"", 0),
+    ]
+    schemas = footer_schemas(out)
+    assert schemas and all(s == landed_schema for s in schemas)
+
+    empty = str(tmp_path / "landing_empty")
+    land_raw_files(spark, [], empty)
+    assert spark.read.parquet(empty).count() == 0
+    schemas = footer_schemas(empty)
+    assert schemas and all(s == landed_schema for s in schemas)
 
 
 def test_cli_backfill_and_list(spark, tmp_path, capsys, monkeypatch):
